@@ -287,78 +287,57 @@ def broadcast_dim(
 
 
 def gated_pair_sides(
-    df: DataFrame,
-    sf_dir: str,
-    table: str,
-    rows_per_base: int,
-    row_bytes: int = 40,
-    part_key: str = "doc_id",
-    max_bytes: int | None = None,
+    df: DataFrame, sf_dir: str, table: str, rows_per_base: int
 ) -> tuple[DataFrame, DataFrame]:
-    """("a", "b") aliased sides for a candidate-heavy SELF-join, with the
-    exchange-free pair plan applied while the frame passes the broadcast
-    gate (the shared shape of text_sparse_cosine_topk and dedup_simhash;
-    3.6×/1.5× measured at sf0.1):
+    """("a", "b") aliased sides for a candidate-heavy SELF-join on a
+    frame keyed by ``doc_id``, with the exchange-free pair plan applied
+    while the frame passes the broadcast gate (the shared shape of
+    text_sparse_cosine_topk and dedup_simhash):
 
-    - gate OPEN (``table_rowcount × rows_per_base × row_bytes`` under
-      ``BROADCAST_GATE_BYTES``): hash-partition the probe side by
-      ``part_key`` and BROADCAST the build side. The downstream pair
-      aggregate/dedup keys (a.key, b.key) are then already clustered by
-      a.key, so the multi-million-row pair stream aggregates IN PLACE —
-      no pair-level exchange, which is where the SMJ shape spends ~70%
-      of its time on collision-rich corpora. The frame is persisted
-      (default MEMORY_AND_DISK_DESER) because a broadcast build side
-      cannot ReuseExchange the probe side's shuffle subtree — without
-      the pin the signature subtree recomputes once per use (measured
-      SLOWER than the SMJ baseline). The caller returns a lazy frame,
-      so there is no post-action unpersist hook; instead residency is
-      bounded by a small LRU (``_PAIR_CACHE_MAX`` plans, deduped by
-      semantic hash so re-invoking one entry reuses its slot): when a
-      third distinct pair plan persists, the oldest unpersists, so the
-      session-wide bound is ``_PAIR_CACHE_MAX × BROADCAST_GATE_BYTES``
-      regardless of how many entries share this helper.
+    - gate OPEN (``table_rowcount × rows_per_base × PAIR_ROW_BYTES``
+      under ``BROADCAST_GATE_BYTES``): hash-partition the frame by
+      ``doc_id`` into ``defaultParallelism`` partitions (doubled when
+      that equals ``spark.sql.shuffle.partitions``), probe with it and
+      BROADCAST the same frame as the build side. The downstream
+      pair aggregate/dedup keys (a.doc_id, b.doc_id) are then already
+      clustered by a.doc_id, so the multi-million-row pair stream
+      aggregates IN PLACE — no pair-level exchange, which is where the
+      SMJ shape spends ~70% of its time on collision-rich corpora. The
+      partition COUNT is what makes this fast. A column-only
+      ``repartition("doc_id")`` is planned away when the frame is
+      already hash-partitioned by doc_id upstream (the sparse
+      signature's window), and AQE coalesces that upstream exchange of
+      a small frame into about one partition, so the pair aggregate
+      runs as one task — no faster than the SMJ arm at sf0.1. An
+      explicit count is a REPARTITION_BY_NUM that AQE leaves alone, as
+      long as it differs from the upstream exchange's count (equal
+      counts are planned away the same way). Nothing is persisted: a
+      re-run does the first run's work.
     - gate CLOSED (huge corpus): the plain self-join shape — SMJ with
       exchange-reused subtrees, pair aggregate with its own shuffle.
       Slower constants, but nothing is ever driver- or cache-resident.
 
-    Plan arms pinned in test_sparse_cosine_pair_agg_needs_no_exchange
-    and the simhash twin. Persist substitution is plan-based (Spark's
-    CacheManager), so sibling frames built from the caller's original
-    ``df`` lineage also read the cache."""
+    Plan arms pinned in test_sparse_cosine_pair_agg_needs_no_exchange,
+    the simhash twin and test_gated_pair_sides_closed_arm_identical."""
     from pyspark.sql import functions as F
 
-    gate = BROADCAST_GATE_BYTES if max_bytes is None else max_bytes
-    small = (
-        table_rowcount(sf_dir, table) * rows_per_base * row_bytes <= gate
-    )
-    if small:
-        df = df.persist()
-        app_id = df.sparkSession.sparkContext.applicationId
-        # Entries from a stopped SparkSession hold frames bound to a dead
-        # context: they can't be unpersisted (the eviction call would
-        # raise into the first gated call of the NEW session) and they
-        # squat the LRU slots, so purge them on app change — their cached
-        # blocks died with the old context anyway.
-        for stale_key in [k for k in _PAIR_CACHE if k[0] != app_id]:
-            stale = _PAIR_CACHE.pop(stale_key)
-            try:
-                stale.unpersist(blocking=False)
-            except Exception:
-                pass  # frame belongs to a stopped context
-        key = (app_id, df.semanticHash())
-        _PAIR_CACHE.pop(key, None)  # re-invocation: refresh LRU position
-        _PAIR_CACHE[key] = df
-        while len(_PAIR_CACHE) > _PAIR_CACHE_MAX:
-            _PAIR_CACHE.pop(next(iter(_PAIR_CACHE))).unpersist(blocking=False)
-        return df.repartition(part_key).alias("a"), F.broadcast(df.alias("b"))
-    return df.alias("a"), df.alias("b")
+    # gate read at CALL time so the gate-closed sweep can force it shut
+    bound = table_rowcount(sf_dir, table) * rows_per_base * PAIR_ROW_BYTES
+    if bound > BROADCAST_GATE_BYTES:
+        return df.alias("a"), df.alias("b")
+    spark = df.sparkSession
+    n = spark.sparkContext.defaultParallelism
+    # a count equal to an upstream doc_id exchange's (shuffle.partitions)
+    # is planned away, leaving the probe on that exchange's AQE-coalesced
+    # read — one task for the whole pair aggregate
+    if n == int(spark.conf.get("spark.sql.shuffle.partitions")):
+        n *= 2
+    p = df.repartition(n, "doc_id")
+    return p.alias("a"), F.broadcast(p.alias("b"))
 
 
-# LRU of persisted pair-build frames, keyed by (applicationId, semantic
-# hash) — the appId factor scopes entries to the live SparkSession (see
-# gated_pair_sides): bounds cache residency to MAX × gate per session.
-_PAIR_CACHE: dict[tuple[str, int], DataFrame] = {}
-_PAIR_CACHE_MAX = 2
+# broadcast-cost estimate per pair-frame row: a few longs/short strings
+PAIR_ROW_BYTES = 40
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from live_data_spark.catalog import load, register
+from live_data_spark.operators.dedup import _truncate_lineage
 
 # ---------------------------------------------------------------------------
 # Sequence packing — fixed token-budget bins (concat-and-split).
@@ -169,61 +170,30 @@ def source_cap_hash_rate(
     bounding it by corpus ROWS shuts the gate at ~1M docs even with a
     handful of sources, degrading this join to a source-keyed shuffle of
     the whole corpus at exactly the scale the skew-free form exists for.
-    So this helper gates compute-then-decide instead: persist the counts
-    aggregate (≤|sources| rows), materialize it once (`count()` — the one
-    corpus scan phase 1 costs anyway), and hint the broadcast iff the
-    REAL size n_sources×32B is under the gate. Per-domain web caps can
-    legitimately exceed it (~100M registered domains ≈ 3 GiB); above the
-    gate the plain frame falls back to Catalyst's strategy, where AQE's
-    skew-join split handles the mega-domain hot partition. The
-    materialized frame is memoized per (app, sf_dir, on-disk state
-    fingerprint) for the session, so sweeps re-invoking the helper share
-    one ≤|sources|-row cache entry; the fingerprint factor means a
-    rewrite/re-ingest at the same path re-counts instead of serving the
-    pre-rewrite counts (the staleness class catalog._table_state's
-    footer caches exist to prevent), and residency is LRU-bounded like
-    catalog._PAIR_CACHE so a long multi-corpus session can't accumulate
-    one persisted frame per sf_dir it ever touched.
+    So this helper gates compute-then-decide instead: materialize the
+    counts aggregate (≤|sources| rows) once through ``_truncate_lineage``
+    (the one corpus scan phase 1 costs anyway), count its rows, and hint
+    the broadcast iff the REAL size n_sources×32B is under the gate.
+    Per-domain web caps can legitimately exceed it (~100M registered
+    domains ≈ 3 GiB); above the gate the plain frame falls back to
+    Catalyst's strategy, where AQE's skew-join split handles the
+    mega-domain hot partition. Nothing outlives the returned frame: the
+    materialized blocks are freed with it, and every call re-counts, so
+    a rewrite/re-ingest at the same path is always read fresh.
     """
-    d = load(spark, sf_dir, "documents")
     from live_data_spark import catalog as _cat
 
-    app_id = spark.sparkContext.applicationId
-    _, fp = _cat._table_state(sf_dir, "documents")
-    memo_key = (app_id, sf_dir, fp)
-    memo = _HASH_RATE_COUNTS_MEMO
-    if memo_key not in memo:
-        # purge dead-session entries and superseded fingerprints of this
-        # corpus (their persisted counts describe the pre-rewrite table)
-        for k in [
-            k for k in memo if k[0] != app_id or (k[1] == sf_dir and k != memo_key)
-        ]:
-            old, _ = memo.pop(k)
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass  # frame belongs to a stopped context
-        counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs")).persist()
-        memo[memo_key] = (counts, counts.count())
-        while len(memo) > _HASH_RATE_MEMO_MAX:
-            memo.pop(next(iter(memo)))[0].unpersist(blocking=False)
-    else:
-        memo[memo_key] = memo.pop(memo_key)  # refresh LRU position
-    counts, n_sources = memo[memo_key]
+    d = load(spark, sf_dir, "documents")
+    counts = _truncate_lineage(
+        d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
+    )
     # gate read at CALL time so the gate-closed sweep can force it shut
-    if n_sources * 32 <= _cat.BROADCAST_GATE_BYTES:
+    if counts.count() * 32 <= _cat.BROADCAST_GATE_BYTES:
         counts = F.broadcast(counts)
     dc = d.join(counts, "source")
     return dc.where(
         F.pmod(F.xxhash64(F.col("doc_id")), F.col("n_docs")) < F.lit(cap)
     ).select("doc_id", "source", "n_docs")
-
-
-# (appId, sf_dir, state fingerprint) -> (counts frame, n_sources) — LRU
-# of tiny persisted per-corpus count frames, same bounded posture as
-# catalog._PAIR_CACHE (see source_cap_hash_rate's gate note)
-_HASH_RATE_COUNTS_MEMO: dict = {}
-_HASH_RATE_MEMO_MAX = 4
 
 
 # ---------------------------------------------------------------------------

@@ -465,7 +465,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dropDuplicates keys (doc_id_1, doc_id_2) dedup in place with no
     # pair-level exchange (the hot spot: collision-rich 12-bit buckets
     # on a degenerate corpus). Shared shape: catalog.gated_pair_sides
-    # (plan arms + persist rationale in its docstring).
+    # (plan arms + why the probe's partition count matters).
     from live_data_spark.catalog import gated_pair_sides
 
     a, b = gated_pair_sides(bands, sf_dir, "documents", SIMHASH_BANDS)

@@ -52,16 +52,6 @@ from live_data_spark.operators.text import normalized_text
 N_MERGES = 24  # merge table size for the catalog entries (tiny demo vocab)
 END_MARK = "</w>"  # end-of-word sentinel so merges can't cross word ends
 
-# session-lifetime memo keyed by (sf_dir, n_merges), storing
-# (table_fingerprint, merges): training is deterministic, and the
-# trainer + encoder catalog entries share one run instead of re-paying
-# the full merge loop (durable form: artifacts.py). The fingerprint
-# lives in the VALUE, not the key, so a rewrite at the same sf_dir
-# REPLACES the entry instead of accumulating a dead one per rewrite for
-# the driver's lifetime (merge tables are non-trivial payloads).
-_TRAIN_CACHE: dict[tuple, tuple[object, list[tuple[str, str, int]]]] = {}
-
-
 def word_type_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, freq) over whitespace words of normalized text.
 
@@ -120,17 +110,6 @@ def bpe_train(
     lexicographically smallest (left, right) — mirrored by the Python
     reference in tests.
     """
-    from live_data_spark.catalog import _table_state
-
-    # fingerprint check: a rewrite/re-ingest at the same sf_dir re-trains
-    # instead of serving the pre-rewrite merge table (the same staleness
-    # class the footer caches and the hash-rate memo key on), and the
-    # retrain evicts the stale entry (fingerprint compared, not keyed)
-    key = (sf_dir, n_merges)
-    fp = _table_state(sf_dir, "documents")[1]
-    hit = _TRAIN_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
     wt = word_type_table(spark, sf_dir).select(
         "freq",
         F.concat(F.split("word", ""), F.array(F.lit(END_MARK))).alias("syms"),
@@ -164,7 +143,6 @@ def bpe_train(
         # sf0.01 where fixed per-job overhead dominates the tiny vocab)
         if it % 3 == 2:
             wt = _truncate_lineage(wt)
-    _TRAIN_CACHE[key] = (fp, merges)
     return merges
 
 

@@ -40,6 +40,37 @@ def canon_rows(rows, columns):
     return sorted(tuple(canon(row[i]) for i in order) for row in rows)
 
 
+def run_in_job_group(spark, fn):
+    """Run ``fn()`` (build AND action) under a fresh job group and return
+    (executed stages, input records) of every job it launched, read from
+    Spark's status store. Stage attempts the scheduler SKIPPED (shuffle
+    output reused) are not counted, and a stage shared by two jobs of
+    the group is counted once."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"work-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the store is fed asynchronously
+    store = sc._jsc.sc().statusStore()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    tracker = sc.statusTracker()
+    sids = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    stages = records = 0
+    for sid in sids:
+        attempts = store.stageData(sid, False, sc._jvm.java.util.ArrayList(), False, no_quantiles)
+        for i in range(attempts.size()):
+            sd = attempts.apply(i)
+            if sd.status().toString() != "SKIPPED":
+                stages += 1
+                records += sd.inputRecords()
+    return stages, records
+
+
 # Non-catalog hardening helpers (implemented swap-ins documented in
 # SCALE.md): the default-deny sweeps (plan hygiene, empty input) can't
 # discover them through the catalog, so they enumerate ONE shared list.

@@ -480,7 +480,6 @@ def test_source_cap_hash_rate_gates_on_real_counts_size(spark, sf_dir, monkeypat
     from live_data_spark import catalog as cat
     from live_data_spark.operators import curation
 
-    curation._HASH_RATE_COUNTS_MEMO.clear()
     monkeypatch.setattr(cat, "BROADCAST_GATE_BYTES", 5_000)  # 640 < 5000 < 16000
     plan = (
         curation.source_cap_hash_rate(spark, sf_dir, cap=10)
@@ -502,16 +501,12 @@ def test_source_cap_hash_rate_gates_on_real_counts_size(spark, sf_dir, monkeypat
         assert "BroadcastHashJoin" not in plan_shut
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    curation._HASH_RATE_COUNTS_MEMO.clear()
 
 
 def test_source_cap_hash_rate_memo_tracks_on_disk_state(spark, tmp_path):
-    """The counts memo keys on the table's stat FINGERPRINT, not its path:
-    a rewrite/re-ingest at the same sf_dir must re-count (serving the
+    """A rewrite/re-ingest at the same sf_dir must re-count: serving the
     pre-rewrite counts would mis-gate the broadcast and mis-filter via a
-    stale n_docs), the superseded persisted frame must unpersist, and the
-    memo holds one live entry per corpus (catalog._PAIR_CACHE's bounded
-    posture)."""
+    stale n_docs."""
     from live_data_spark.operators import curation
 
     def write(n_sources):
@@ -520,25 +515,13 @@ def test_source_cap_hash_rate_memo_tracks_on_disk_state(spark, tmp_path):
             rows, "doc_id long, text string, lang string, source string, n_chars long"
         ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
 
-    curation._HASH_RATE_COUNTS_MEMO.clear()
     write(2)
     first = curation.source_cap_hash_rate(spark, str(tmp_path), cap=100)
     assert {r["source"] for r in first.collect()} == {"s0", "s1"}
-    (old_key,) = curation._HASH_RATE_COUNTS_MEMO
-    assert curation._HASH_RATE_COUNTS_MEMO[old_key][1] == 2
 
-    write(4)  # re-ingest at the SAME path: more sources, new fingerprint
+    write(4)  # re-ingest at the SAME path: more sources
     second = curation.source_cap_hash_rate(spark, str(tmp_path), cap=100)
     assert {r["source"] for r in second.collect()} == {"s0", "s1", "s2", "s3"}
-    # superseded entry purged (its frame unpersisted on the way out — not
-    # assertable via storageLevel: the rewritten table's counts plan
-    # canonicalizes equal to the old one, so the old frame reports the
-    # NEW cache entry's level), one live entry per corpus
-    (new_key,) = curation._HASH_RATE_COUNTS_MEMO
-    assert new_key != old_key and curation._HASH_RATE_COUNTS_MEMO[new_key][1] == 4
-    for df, _ in curation._HASH_RATE_COUNTS_MEMO.values():
-        df.unpersist(blocking=False)
-    curation._HASH_RATE_COUNTS_MEMO.clear()
 
 
 def test_dsir_select_equals_global_prefix_rule(spark, sf_dir):

@@ -3,7 +3,7 @@
 The full suite outgrew the external driver's verify window (31-43 min;
 the r12 driver run timed out at ~80% with zero failures, leaving the
 round without independent confirmation). pytest.ini's default lane
-excludes the five catalog-wide strategy/hygiene sweeps; this module
+excludes the catalog-wide strategy/hygiene sweeps; this module
 pins the mechanics so the split cannot silently rot:
 
 - pytest.ini carries the `-m "not slow"` addopts and registers the
@@ -30,6 +30,7 @@ SLOW_MODULES = (
     "test_count_smoke.py",
     "test_empty_input.py",
     "test_plan_hygiene.py",
+    "test_reinvocation_sweep.py",
 )
 
 

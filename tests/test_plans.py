@@ -426,10 +426,7 @@ def test_sparse_cosine_pair_agg_needs_no_exchange(spark, sf_dir):
     pair-level aggregate — the 10M+-row hot spot on a degenerate
     vocabulary — runs IN PLACE on the join output (HashPartitioning on
     a.doc_id satisfies the (a.doc_id, b.doc_id) clustering). A
-    reintroduced pair exchange is the 3.6× regression this pins against.
-    The persisted signature (InMemoryTableScan) is load-bearing too: a
-    broadcast build side cannot ReuseExchange the probe's shuffle
-    subtree, so without the pin the tf-idf window recomputes per use."""
+    reintroduced pair exchange is the regression this pins against."""
     df = catalog()["text_sparse_cosine_topk"].spark(spark, sf_dir)
     df.collect()  # AQE: read the final plan
     plan = _plan(df)
@@ -445,16 +442,19 @@ def test_sparse_cosine_pair_agg_needs_no_exchange(spark, sf_dir):
     join_at = plan.index("BroadcastHashJoin [term#", agg_at)
     between = plan[agg_at:join_at]
     assert "Exchange" not in between, "pair aggregate re-shuffles the pair stream"
-    assert "InMemoryTableScan" in plan, "signature frame is not persisted"
+    # the probe keeps its own partition count: this session runs
+    # shuffle.partitions == defaultParallelism, the count that would be
+    # planned away onto the signature window's coalesced exchange
+    assert "REPARTITION_BY_NUM" in plan, "probe lost its explicit partitioning"
 
 
-def test_gated_pair_sides_closed_arm_identical(spark, sf_dir):
+def test_gated_pair_sides_closed_arm_identical(spark, sf_dir, monkeypatch):
     """The helper's gate-CLOSED arm (the one a huge corpus actually
-    runs): forcing the gate shut via max_bytes=1 must return plain
-    aliased sides — no persist, no probe repartition — and the pair
-    aggregate over them must produce results identical to the open
-    arm's exchange-free plan."""
-    from live_data_spark.catalog import gated_pair_sides
+    runs): forcing the gate shut must return plain aliased sides — no
+    probe repartition of either kind — and the pair aggregate over them
+    must produce results identical to the open arm's exchange-free
+    plan."""
+    from live_data_spark import catalog as cat
 
     sig = (
         load(spark, sf_dir, "documents")
@@ -476,89 +476,18 @@ def test_gated_pair_sides_closed_arm_identical(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
-    opened = pairs(*gated_pair_sides(sig, sf_dir, "documents", 1))
-    closed_sides = gated_pair_sides(sig, sf_dir, "documents", 1, max_bytes=1)
-    closed = pairs(*closed_sides)
+    opened = pairs(*cat.gated_pair_sides(sig, sf_dir, "documents", 1))
+    monkeypatch.setattr(cat, "BROADCAST_GATE_BYTES", -1)
+    closed = pairs(*cat.gated_pair_sides(sig, sf_dir, "documents", 1))
     closed_plan = _plan(closed)
-    assert "REPARTITION_BY_COL" not in closed_plan  # no probe pre-partition
+    # the open arm's probe has an explicit partition count (AQE would
+    # coalesce a column-only repartition); the closed arm has neither
+    assert "REPARTITION_BY_NUM" in _plan(opened)
+    assert "REPARTITION_BY_COL" not in closed_plan
+    assert "REPARTITION_BY_NUM" not in closed_plan
     got_open = sorted(tuple(r) for r in opened.collect())
     got_closed = sorted(tuple(r) for r in closed.collect())
     assert got_open == got_closed and got_open  # identical, non-trivial
-
-
-def test_gated_pair_sides_cache_residency_is_lru_bounded(spark, sf_dir):
-    """The open arm persists its build frame (a broadcast build side
-    can't ReuseExchange the probe's subtree), and the caller returns a
-    lazy frame — no unpersist hook. The residency bound must therefore
-    come from the helper itself: at most _PAIR_CACHE_MAX distinct pair
-    plans stay persisted (oldest unpersists), and re-invoking the SAME
-    plan reuses its slot instead of consuming a new one."""
-    from live_data_spark import catalog as cat
-
-    for df in cat._PAIR_CACHE.values():  # don't orphan earlier tests' pins
-        df.unpersist(blocking=False)
-    cat._PAIR_CACHE.clear()
-    base = load(spark, sf_dir, "documents")
-
-    def sig(k):
-        return base.select(
-            "doc_id", F.substring(F.lower("text"), 1, k).alias("term")
-        )
-
-    persisted = {}  # k -> (semantic hash, the helper's persisted frame)
-    for k in (3, 4, 5):
-        cat.gated_pair_sides(sig(k), sf_dir, "documents", 1)
-        seen = {h for h, _ in persisted.values()}
-        new = [h for h in cat._PAIR_CACHE if h not in seen]
-        assert len(new) == 1
-        persisted[k] = (new[0], cat._PAIR_CACHE[new[0]])
-        assert len(cat._PAIR_CACHE) <= cat._PAIR_CACHE_MAX
-
-    def is_persisted(df):
-        return df.storageLevel.useMemory or df.storageLevel.useDisk
-
-    # the oldest (k=3) was evicted AND unpersisted; the two newest remain
-    assert persisted[3][0] not in cat._PAIR_CACHE
-    assert not is_persisted(persisted[3][1])
-    assert is_persisted(persisted[4][1]) and is_persisted(persisted[5][1])
-    # re-invoking an already-cached plan reuses its slot — no eviction
-    cat.gated_pair_sides(sig(5), sf_dir, "documents", 1)
-    assert set(cat._PAIR_CACHE) == {persisted[4][0], persisted[5][0]}
-    assert is_persisted(persisted[4][1])
-    for df in cat._PAIR_CACHE.values():
-        df.unpersist(blocking=False)
-    cat._PAIR_CACHE.clear()
-
-
-def test_gated_pair_sides_purges_dead_session_entries(spark, sf_dir):
-    """Cache entries keyed to a STOPPED SparkSession hold frames whose
-    context is gone: an LRU eviction calling their unpersist() would
-    raise into the first gated call of the new session, and the dead
-    entries squat the two LRU slots. The helper must purge other-app
-    entries without raising and key its own under the live appId."""
-    from live_data_spark import catalog as cat
-
-    class DeadFrame:
-        def unpersist(self, blocking=False):
-            raise RuntimeError("Cannot call methods on a stopped SparkContext")
-
-    for df in cat._PAIR_CACHE.values():  # don't orphan earlier tests' pins
-        df.unpersist(blocking=False)
-    cat._PAIR_CACHE.clear()
-    cat._PAIR_CACHE[("app-dead", 1)] = DeadFrame()
-    cat._PAIR_CACHE[("app-dead", 2)] = DeadFrame()
-
-    base = load(spark, sf_dir, "documents").select(
-        "doc_id", F.substring(F.lower("text"), 1, 3).alias("term")
-    )
-    cat.gated_pair_sides(base, sf_dir, "documents", 1)  # must not raise
-    app = spark.sparkContext.applicationId
-    assert set(cat._PAIR_CACHE) != set() and all(
-        k[0] == app for k in cat._PAIR_CACHE
-    )
-    for df in cat._PAIR_CACHE.values():
-        df.unpersist(blocking=False)
-    cat._PAIR_CACHE.clear()
 
 
 def test_simhash_pair_dedup_needs_no_exchange(spark, sf_dir):
@@ -566,9 +495,7 @@ def test_simhash_pair_dedup_needs_no_exchange(spark, sf_dir):
     (catalog.gated_pair_sides): the candidate dropDuplicates — a
     (doc_id_1, doc_id_2)-keyed aggregate over the band-bucket self-join's
     fan-out — must run directly on the join output with no pair-level
-    exchange, and the persisted bands frame must appear as an
-    InMemoryTableScan (a broadcast build side can't ReuseExchange the
-    probe's shuffle subtree; without the pin the sketch recomputes)."""
+    exchange."""
     df = catalog()["dedup_simhash"].spark(spark, sf_dir)
     df.collect()
     plan = _plan(df)
@@ -577,4 +504,4 @@ def test_simhash_pair_dedup_needs_no_exchange(spark, sf_dir):
     join_at = plan.index("BroadcastHashJoin [band#", m.start())
     between = plan[m.start():join_at]
     assert "Exchange" not in between, "candidate dedup re-shuffles the pair stream"
-    assert "InMemoryTableScan" in plan, "bands frame is not persisted"
+    assert "REPARTITION_BY_NUM" in plan, "probe lost its explicit partitioning"
