@@ -79,10 +79,11 @@ def catalog() -> dict[str, QuerySpec]:
     return {n: _REGISTRY[n] for n in check_order(_REGISTRY, has_oracle)}
 
 
-# events.parquet stores ts as INT64 TIMESTAMP(NANOS) — Spark has no nanosecond
-# timestamp, so we read nanos as long and rebuild a TIMESTAMP_NTZ at microsecond
-# precision with pure integer arithmetic (session-TZ independent; matches
-# DuckDB's nanos→micros truncation).
+# events.parquet may store ts as INT64 TIMESTAMP(NANOS) — Spark has no
+# nanosecond timestamp, so such a file is read with ts declared bigint and a
+# TIMESTAMP_NTZ is rebuilt at microsecond precision with pure integer
+# arithmetic (session-TZ independent; matches DuckDB's nanos→micros
+# truncation).
 _EVENTS_TS_NTZ = (
     "timestampadd(MICROSECOND, (ts div 1000) % 1000000, "
     "timestampadd(SECOND, ts div 1000000000, TIMESTAMP_NTZ '1970-01-01 00:00:00'))"
@@ -90,16 +91,46 @@ _EVENTS_TS_NTZ = (
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read one driver testdata table (TESTDATA.md)."""
-    if table == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            from pyspark.sql import functions as F
+    """Read one driver testdata table (TESTDATA.md).
 
-            df = df.withColumn("ts", F.expr(_EVENTS_TS_NTZ))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    Reading never changes session conf. The events ``ts`` encoding comes
+    from the parquet footer: a micro-second (or Spark INT96) file is a
+    plain read; an INT64 nanosecond file is read through an explicit
+    schema with ``ts`` as bigint (legal without
+    ``spark.sql.legacy.parquet.nanosAsLong``) and rebuilt by
+    ``_EVENTS_TS_NTZ``."""
+    path = f"{sf_dir}/{table}.parquet"
+    schema = _nanos_ts_schema(sf_dir, table) if table == "events" else None
+    if schema is None:
+        return spark.read.parquet(path)
+    from pyspark.sql import functions as F
+
+    return spark.read.schema(schema).parquet(path).withColumn("ts", F.expr(_EVENTS_TS_NTZ))
+
+
+def _nanos_ts_schema(sf_dir: str, table: str):
+    """The table's Spark read schema with ``ts`` as bigint when its first
+    footer stores ``ts`` as INT64 TIMESTAMP(NANOS), else None — a
+    metadata read, no Spark job."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    files = _table_state(sf_dir, table)[0]
+    if not files:
+        return None
+    pf = pq.ParquetFile(files[0])
+    if "ts" not in pf.schema.names:
+        return None
+    col = pf.schema.column(pf.schema.names.index("ts"))
+    if col.physical_type != "INT64" or '"nanoseconds"' not in col.logical_type.to_json():
+        return None
+    return StructType(
+        [
+            StructField("ts", LongType()) if f.name == "ts" else f
+            for f in from_arrow_schema(pf.schema_arrow, prefer_timestamp_ntz=True)
+        ]
+    )
 
 
 def _table_state(
@@ -297,11 +328,14 @@ def gated_pair_sides(
     - gate OPEN (``table_rowcount × rows_per_base × PAIR_ROW_BYTES``
       under ``BROADCAST_GATE_BYTES``): hash-partition the frame by
       ``doc_id`` into ``defaultParallelism`` partitions (doubled when
-      that equals ``spark.sql.shuffle.partitions``), probe with it and
-      BROADCAST the same frame as the build side. The downstream
-      pair aggregate/dedup keys (a.doc_id, b.doc_id) are then already
-      clustered by a.doc_id, so the multi-million-row pair stream
-      aggregates IN PLACE — no pair-level exchange, which is where the
+      that equals the batch exchange count the planner uses:
+      ``numShufflePartitions``, i.e. ``initialPartitionNum`` under AQE,
+      not ``spark.sql.shuffle.partitions``, which sizes streaming
+      state), probe with it and BROADCAST the same frame as the build
+      side. The downstream pair aggregate/dedup keys (a.doc_id,
+      b.doc_id) are then already clustered by a.doc_id, so the
+      multi-million-row pair stream aggregates IN PLACE — no
+      pair-level exchange, which is where the
       SMJ shape spends ~70% of its time on collision-rich corpora. The
       partition COUNT is what makes this fast. A column-only
       ``repartition("doc_id")`` is planned away when the frame is
@@ -327,10 +361,11 @@ def gated_pair_sides(
         return df.alias("a"), df.alias("b")
     spark = df.sparkSession
     n = spark.sparkContext.defaultParallelism
-    # a count equal to an upstream doc_id exchange's (shuffle.partitions)
-    # is planned away, leaving the probe on that exchange's AQE-coalesced
+    # a count equal to an upstream doc_id exchange's (numShufflePartitions:
+    # the batch count, not the streaming shuffle.partitions conf) is
+    # planned away, leaving the probe on that exchange's AQE-coalesced
     # read — one task for the whole pair aggregate
-    if n == int(spark.conf.get("spark.sql.shuffle.partitions")):
+    if n == spark._jsparkSession.sessionState().conf().numShufflePartitions():
         n *= 2
     p = df.repartition(n, "doc_id")
     return p.alias("a"), F.broadcast(p.alias("b"))

@@ -8,8 +8,17 @@ operator in the package inherits them.
 Scale notes (100 TB posture):
 - AQE on: runtime partition coalescing, skew-join splitting, dynamic
   broadcast decisions replace any hand-tuned shuffle counts.
-- ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE
-  coalesces it down. On a real cluster set it ~2-3x total cores.
+- Two partition counts, one per engine. Batch exchanges start at
+  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
+  (``shuffle_partitions``, default 32), the *initial* number AQE
+  coalesces down; under AQE it is what ``numShufflePartitions``
+  resolves to. On a real cluster set it ~2-3x total cores.
+- ``spark.sql.shuffle.partitions`` sizes streaming state. Streaming
+  runs without AQE, and a stateful query freezes this count into its
+  checkpoint at first start as its state-store partition count, paying
+  one store load and commit per partition every micro-batch. It is set
+  to ``defaultParallelism`` (the cores; total executor cores on a
+  cluster) unless ``extra_conf`` names it.
 - Session timezone pinned to UTC so parquet TIMESTAMP (isAdjustedToUTC=false)
   values are stable regardless of host TZ (SURVEY.md §7.2a).
 - Arrow enabled for the few Pandas-UDF paths (similarity/multimodal).
@@ -34,6 +43,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
     cluster leave it unset and submit via spark-submit/YARN/K8s.
+    ``shuffle_partitions`` is the batch exchanges' initial count (32 when
+    unset); streaming state partitions follow the cores (module notes).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -56,10 +67,15 @@ def get_spark(
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    else:
-        builder = builder.config("spark.sql.shuffle.partitions", "32")
+    builder = builder.config(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        str(shuffle_partitions or 32),
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
+    return spark

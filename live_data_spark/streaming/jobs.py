@@ -24,6 +24,7 @@ checkpointed WALs: restart-safe, exactly-once per file commit.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -460,12 +461,13 @@ def run_available_now_update(result: DataFrame, sink_dir: str, checkpoint_dir: s
 
 def run_available_now(
     result: DataFrame, sink_dir: str, checkpoint_dir: str, output_mode: str = "append"
-) -> None:
+) -> StreamingQuery:
     """Drain the available backlog into a parquet sink, then stop.
 
     The DAG-run analog (O5): each invocation is one serialized run;
     the checkpoint WAL carries source offsets + operator state across
-    invocations, so successive calls process only new files.
+    invocations, so successive calls process only new files. Returns the
+    finished query (its ``recentProgress`` holds the run's batches).
     """
     q = (
         result.writeStream.format("parquet")
@@ -476,6 +478,7 @@ def run_available_now(
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def run_available_now_observed(

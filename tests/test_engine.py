@@ -305,6 +305,53 @@ def test_jsonl_round_trip_documents(spark, sf_dir, tmp_path):
     assert a == b
 
 
+def test_load_reads_nanosecond_events_without_touching_session_conf(spark, sf_dir, tmp_path):
+    """``catalog.load`` reads an INT64 TIMESTAMP(NANOS) events file to the
+    same rows as the legacy ``nanosAsLong`` read, and loading every
+    testdata table (micro-second events included) leaves the session conf
+    exactly as it was."""
+    import datetime as dt
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from live_data_spark.catalog import _EVENTS_TS_NTZ, load
+
+    ns = [1785578400123456789, 1785583805999999999, 1785590000000000500, None]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3, 4], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+                "user_id": pa.array([7, 8, 9, 7], pa.int64()),
+                "event_type": ["click", "view", "buy", "view"],
+                "value": [1.5, 2.0, None, 4.25],
+                "props": ["{}", "{}", "{}", None],
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    before = dict(spark.conf.getAll)
+    for path in sorted(Path(sf_dir).glob("*.parquet")):
+        load(spark, sf_dir, path.name.removesuffix(".parquet")).collect()
+    got = load(spark, str(tmp_path), "events")
+    rows = got.collect()
+    assert dict(spark.conf.getAll) == before
+    assert dict(got.dtypes)["ts"] == "timestamp_ntz"
+
+    legacy = spark.newSession()
+    legacy.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    flagged = legacy.read.parquet(str(tmp_path / "events.parquet"))
+    assert dict(flagged.dtypes)["ts"] == "bigint"
+    want = flagged.withColumn("ts", F.expr(_EVENTS_TS_NTZ)).collect()
+    assert rows == want
+    epoch = dt.datetime(1970, 1, 1)
+    assert [r["ts"] for r in rows] == [
+        None if v is None else epoch + dt.timedelta(microseconds=v // 1000) for v in ns
+    ]
+
+
 def test_ingest_malformed_rows_are_isolated(spark, tmp_path):
     """PERMISSIVE CSV ingest: a malformed line lands in _corrupt_record
     (quarantine-able), clean rows load typed — a 100 TB append can't be

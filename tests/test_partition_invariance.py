@@ -2,8 +2,12 @@
 
 Runs EVERY catalog entry twice at sf0.001 — once under the session's
 default shuffle partitioning (4, parallel partial aggregates) and once
-with ``spark.sql.shuffle.partitions=1`` (one sequential fold) — and
-asserts the canonicalized results are identical.
+with one batch shuffle partition (one sequential fold) — and asserts the
+canonicalized results are identical. Batch exchanges take their count
+from ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` (AQE
+is on), so that is the conf that forces the fold, and the sweep checks
+the planner really sees 1. It also sets ``spark.sql.shuffle.partitions``
+to 1, which sizes the state of the streaming entries' drains.
 
 Motivation: the oracle-parity suite proves Spark ≡ DuckDB at ONE
 partition layout. A result that depends on HOW rows were split across
@@ -46,10 +50,17 @@ def test_catalog_entry_is_partition_layout_invariant(spark, name):
         return _canon([tuple(r) for r in df.collect()], df.columns)
 
     base = run()
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    keys = (
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.shuffle.partitions",
+    )
+    old = {k: spark.conf.get(k) for k in keys}
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        for k in keys:
+            spark.conf.set(k, "1")
+        assert spark._jsparkSession.sessionState().conf().numShufflePartitions() == 1
         solo = run()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
     assert solo == base, f"{name}: result depends on shuffle partition layout"

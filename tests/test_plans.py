@@ -442,9 +442,9 @@ def test_sparse_cosine_pair_agg_needs_no_exchange(spark, sf_dir):
     join_at = plan.index("BroadcastHashJoin [term#", agg_at)
     between = plan[agg_at:join_at]
     assert "Exchange" not in between, "pair aggregate re-shuffles the pair stream"
-    # the probe keeps its own partition count: this session runs
-    # shuffle.partitions == defaultParallelism, the count that would be
-    # planned away onto the signature window's coalesced exchange
+    # the probe keeps its own partition count: this session's batch
+    # count (numShufflePartitions) == defaultParallelism, the count that
+    # would be planned away onto the signature window's coalesced exchange
     assert "REPARTITION_BY_NUM" in plan, "probe lost its explicit partitioning"
 
 

@@ -61,13 +61,11 @@ def _drain(spark, result, tmp_path, name):
     return spark.read.parquet(str(sink))
 
 
-def test_hourly_rollup_matches_batch(spark, events_dir, tmp_path):
-    stream = jobs.read_events_stream(spark, events_dir)
-    got = _drain(spark, jobs.hourly_rollup(stream), tmp_path, "hourly").collect()
-
+def _batch_hourly(spark, src_dir):
+    """Batch twin of ``jobs.hourly_rollup`` over an events directory."""
     # sentinel windows are the (intentionally) unflushed ones -- exclude
-    batch = spark.read.parquet(events_dir).where(F.col("event_type") != "sentinel")
-    want = (
+    batch = spark.read.parquet(src_dir).where(F.col("event_type") != "sentinel")
+    return (
         batch.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -83,8 +81,107 @@ def test_hourly_rollup_matches_batch(spark, events_dir, tmp_path):
         )
         .collect()
     )
+
+
+def test_hourly_rollup_matches_batch(spark, events_dir, tmp_path):
+    stream = jobs.read_events_stream(spark, events_dir)
+    got = _drain(spark, jobs.hourly_rollup(stream), tmp_path, "hourly").collect()
+    want = _batch_hourly(spark, events_dir)
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(got) > 0
+
+
+def _state_instances(query):
+    """State-store instance counts of a finished query's stateful batches."""
+    return {
+        op["numStateStoreInstances"]
+        for p in query.recentProgress
+        for op in p.get("stateOperators", [])
+    }
+
+
+def _pair_probe_partitions(spark, sf_dir):
+    """Probe partition count ``catalog.gated_pair_sides`` picks."""
+    import re
+
+    from live_data_spark.catalog import gated_pair_sides, load
+
+    docs = load(spark, sf_dir, "documents").select("doc_id")
+    a, _ = gated_pair_sides(docs, sf_dir, "documents", 1)
+    plan = a._jdf.queryExecution().analyzed().toString()
+    return int(re.search(r"RepartitionByExpression \[doc_id#\d+L?\], (\d+)", plan).group(1))
+
+
+def test_state_partitions_follow_cores_while_batch_keeps_its_count(
+    spark, sf_dir, events_dir, tmp_path
+):
+    """The session carries two partition counts: batch exchanges start at
+    ``initialPartitionNum`` (the fixture's ``shuffle_partitions=4``, what
+    the planner's ``numShufflePartitions`` resolves to under AQE), while
+    ``spark.sql.shuffle.partitions`` follows the cores and becomes a new
+    stateful query's state-store count."""
+    from live_data_spark.session import get_spark
+
+    cores = spark.sparkContext.defaultParallelism
+    conf = spark._jsparkSession.sessionState().conf()
+    assert conf.numShufflePartitions() == 4
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
+    assert _pair_probe_partitions(spark, sf_dir) == (2 * cores if cores == 4 else cores)
+
+    # a default get_spark() (it re-applies its settings to this session)
+    # keeps the 32-way batch start, and the pair plan compares against it
+    before = dict(spark.conf.getAll)
+    try:
+        assert get_spark() is spark
+        assert conf.numShufflePartitions() == 32
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
+        assert _pair_probe_partitions(spark, sf_dir) == (2 * cores if cores == 32 else cores)
+    finally:
+        for k, v in before.items():
+            if spark.conf.isModifiable(k) and spark.conf.get(k, None) != v:
+                spark.conf.set(k, v)
+    assert conf.numShufflePartitions() == 4
+
+    stream = jobs.read_events_stream(spark, events_dir)
+    sink = str(tmp_path / "sink")
+    q = jobs.run_available_now(jobs.hourly_rollup(stream), sink, str(tmp_path / "ckpt"))
+    assert q.lastProgress["stateOperators"][0]["numStateStoreInstances"] == cores
+    assert _state_instances(q) == {cores}
+    got = spark.read.parquet(sink).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, _batch_hourly(spark, events_dir)))
+
+
+def test_checkpoint_keeps_its_state_partition_count_across_sessions(spark, tmp_path):
+    """A checkpoint started at 32 state partitions keeps 32 when it is
+    restarted on the cores-sized session: the count is frozen in the
+    offset log, and the windows emitted across both runs equal the batch
+    rollup."""
+    src = tmp_path / "src"
+    first = [(i * 2, i % 5, ["click", "view", "buy"][i % 3], (i % 7) + 0.5) for i in range(100)]
+    second = [(m + 200, uid, et, v) for m, uid, et, v in first]
+    _mk_events(spark, first).write.parquet(str(src))
+
+    old = spark.newSession()
+    old.conf.set("spark.sql.shuffle.partitions", "32")
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    q = jobs.run_available_now(
+        jobs.hourly_rollup(jobs.read_events_stream(old, str(src))), sink, ckpt
+    )
+    assert _state_instances(q) == {32}
+    n_first = spark.read.parquet(sink).count()
+    assert n_first > 0
+
+    sentinels = [(SENTINEL_MIN, uid, "sentinel", 0.0) for uid in range(5)]
+    _mk_events(spark, second + sentinels).withColumn(
+        "event_id", F.col("event_id") + 1000
+    ).write.mode("append").parquet(str(src))
+    q = jobs.run_available_now(
+        jobs.hourly_rollup(jobs.read_events_stream(spark, str(src))), sink, ckpt
+    )
+    assert _state_instances(q) == {32}
+    got = spark.read.parquet(sink).collect()
+    assert len(got) > n_first
+    assert sorted(map(tuple, got)) == sorted(map(tuple, _batch_hourly(spark, str(src))))
 
 
 def test_sessionize_stream(spark, events_dir, tmp_path):
